@@ -19,80 +19,7 @@ object AbBench {
       args.lift(1).map(_.toInt).getOrElse(30),
       args.lift(2).map(_.toLong).getOrElse(2000000L),
       args.lift(3).map(_.toInt).getOrElse(10))
-    case Some("knn_rounds") => knnRounds(
-      args.lift(1).map(_.toLong).getOrElse(3200000L))
-    case Some("knn_slim") => knnSlim(
-      args.lift(1).map(_.toLong).getOrElse(3200000L),
-      args.lift(2).map(_.toInt).getOrElse(32))
     case other => sys.error(s"unknown A/B mode: $other")
-  }
-
-  /** kNN window payload: slim (point_id, poly_id, d2) through the ranking
-    * exchange + output-sized x,y re-join (slimWindow=true, the default)
-    * vs x,y riding every candidate through the window sort. `cores` lets
-    * the A/B run at both sides of a scaling pair — the slim shape exists
-    * to cut the bandwidth-bound bytes that cap kNN's N->4N efficiency.
-    */
-  private def knnSlim(nPts: Long, cores: Int): Unit = {
-    val spark = GraftSession.create(s"local[$cores]",
-      math.max(128, (nPts / 50000L).toInt), "graft-ab-knn-slim")
-    import spark.implicits._
-    val polys = GeoTables.syntheticPolygons(spark, 2000).toDF
-    val labels = polys
-      .withColumn("label", graft.functions.GraftFunctions.polylabel(
-        $"exterior", $"holes", $"tolerance"))
-      .select($"poly_id", $"label.x".as("lx"), $"label.y".as("ly"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    val pts = GeoTables.syntheticPoints(spark, nPts).toDF
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pts.count()
-    for (pass <- 1 to Option(System.getenv("AB_PASSES")).map(_.toInt).getOrElse(2);
-         (tag, slim, xy) <- Seq(("fat", false, true), ("slim", true, true),
-           ("noxy", true, false))) {
-      val t0 = System.nanoTime()
-      val out = SpatialJoins.knnJoin(pts, labels, k = 5, level = 7,
-        rounds = Seq(1, 2), slimWindow = slim, outputXY = xy)
-      out.write.format("noop").mode("overwrite").save()
-      graft.operators.Caching.release(out)
-      println(f"[ab knn_slim] pass=$pass variant=$tag cores=$cores pts=$nPts " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    spark.stop()
-  }
-
-  /** kNN ring schedule: Seq(1,2) (narrow first round + annulus second)
-    * vs the speculatively-batched Seq(2) (one kRing(2) explode resolving
-    * both radii in a single window pass — provably the same output, the
-    * resolution test subsumes both rounds' guarantees). Trades ~25/9 more
-    * exploded candidate rows per point against one whole round of
-    * per-round driver fixed cost (~12 stages) — the measured reason knn
-    * scales worse than its siblings.
-    */
-  private def knnRounds(nPts: Long): Unit = {
-    val spark = GraftSession.create("local[32]",
-      math.max(128, (nPts / 50000L).toInt), "graft-ab-knn")
-    import spark.implicits._
-    val polys = GeoTables.syntheticPolygons(spark, 2000).toDF
-    val labels = polys
-      .withColumn("label", graft.functions.GraftFunctions.polylabel(
-        $"exterior", $"holes", $"tolerance"))
-      .select($"poly_id", $"label.x".as("lx"), $"label.y".as("ly"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    val pts = GeoTables.syntheticPoints(spark, nPts).toDF
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pts.count()
-    for (pass <- 1 to Option(System.getenv("AB_PASSES")).map(_.toInt).getOrElse(2);
-         rounds <- Seq(Seq(1, 2), Seq(2))) {
-      val t0 = System.nanoTime()
-      val out = SpatialJoins.knnJoin(pts, labels, k = 5, level = 7, rounds = rounds)
-      out.write.format("noop").mode("overwrite").save()
-      graft.operators.Caching.release(out)
-      println(f"[ab knn_rounds] pass=$pass rounds=${rounds.mkString("+")} pts=$nPts " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    spark.stop()
   }
 
   /** pipJoin non-broadcast (shuffle) path: slim (cell_id, poly_id) cover +

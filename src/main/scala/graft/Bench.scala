@@ -48,7 +48,7 @@ object BenchWorkloads {
           .withColumn("label", polylabel($"exterior", $"holes", $"tolerance"))
           .select($"poly_id", $"label.x".as("lx"), $"label.y".as("ly"))
         SpatialJoins.knnJoin(GeoTables.syntheticPoints(spark, nKnnPoints).toDF,
-          labels, k = 5, level = 7, rounds = Seq(1, 2))
+          labels, k = 5, level = 7)
       }),
       ("tile_assign", nImages, () => {
         Tiling.assign(Tiling.tile(Images.table(spark, nImages)), level = 12)

@@ -29,8 +29,9 @@ object Pipeline {
     val polys = GeoTables.syntheticPolygons(spark, nPolys).toDF
     // verifyWaveClosure=false: the closure probe costs a second pass over
     // the (decode-heavy) transform, and THIS transform is provably
-    // wave-closed — every output row's bucket comes from re-joining the
-    // slice's own bucket column. IcebergLite's re-pin filter still runs.
+    // wave-closed — every output row's bucket is re-derived from its
+    // image_id with IcebergLite.defaultBucket, the expression run() itself
+    // bucketed the slice by. IcebergLite's re-pin filter still runs.
     IcebergLite.run(images, Seq("image_id"), buckets, bucketsPerWave, tableDir,
       verifyWaveClosure = false) { slice =>
       val tiles = Tiling.tile(slice.as[graft.sources.ImageRow](
@@ -38,10 +39,11 @@ object Pipeline {
       val assigned = Tiling.assign(tiles, level)
         .withColumnRenamed("label_x", "x").withColumnRenamed("label_y", "y")
         .withColumnRenamed("cell_id", "tile_cell_id")
-      // bucket re-derived from image_id with EXACTLY IcebergLite.run's
-      // default bucket expression — bit-identical values, so wave closure
-      // still provably holds. The former `.join(slice.select("image_id",
-      // "bucket"))` evaluated the images table a SECOND time per wave:
+      // bucket re-derived from image_id with the SAME
+      // IcebergLite.defaultBucket expression — bit-identical values, so
+      // wave closure still provably holds. The former
+      // `.join(slice.select("image_id", "bucket"))` evaluated the images
+      // table a SECOND time per wave:
       // the table is an opaque typed MapPartitions, so column pruning
       // cannot reach inside it and the join leg re-rendered and
       // re-encoded every image just to read two columns (round-7 plan
@@ -49,7 +51,7 @@ object Pipeline {
       SpatialJoins.pipJoin(assigned, polys, level)
         .select(col("image_id"), col("tile_ix"), col("tile_iy"),
           col("tile_cell_id").as("cell_id"), col("poly_id"))
-        .withColumn("bucket", pmod(xxhash64(col("image_id")), lit(buckets)).cast("int"))
+        .withColumn("bucket", IcebergLite.defaultBucket(Seq("image_id"), buckets))
     }
   }
 }

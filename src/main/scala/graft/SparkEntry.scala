@@ -119,20 +119,20 @@ object SparkEntry {
         .orderBy("point_id", "poly_id")
     }),
 
-    // ---- kNN join via cell-ring expansion (E9) -------------------------
+    // ---- kNN join: label-count quadtree, one cell join (E9) ------------
     "q_knn_join" -> ((s, dir) => knnQuery(s, dir, broadcastLabels = true)),
 
-    // cell-partitioned kNN (no label broadcast — labels replicated into
-    // their own cell ring, shuffle equi-join): identical truth, so it
-    // shares the q_knn_join oracle
+    // cell-partitioned kNN (no label broadcast — points and labels
+    // shuffle on the cell key): identical truth, so it shares the
+    // q_knn_join oracle
     "q_knn_join_part" -> ((s, dir) => knnQuery(s, dir, broadcastLabels = false)),
 
-    // adaptive-extension kNN: a level-13 grid is so fine that the caller
-    // rounds Seq(1,2) resolve essentially nothing and the level-descent
-    // extension rounds (the cross-join fallback's replacement) produce
-    // the whole answer — truth is level-independent, so this shares the
-    // brute-force oracle; run in cell-partitioned mode to drive the
-    // no-cartesian path end-to-end under the driver's oracle
+    // fine-grid kNN: at level 13 almost every leaf near a point is
+    // empty, so each point's guarantee radius spans many cells and the
+    // quadtree search climbs far from the point — truth is
+    // level-independent, so this shares the brute-force oracle; run in
+    // cell-partitioned mode to drive the no-cartesian path end-to-end
+    // under the driver's oracle
     "q_knn_adaptive" -> ((s, dir) =>
       knnQuery(s, dir, broadcastLabels = false, level = 13)),
 

@@ -1,8 +1,10 @@
 package graft.functions
 
 import graft.geom._
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, QuaternaryExpression, SpecificInternalRow, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, EmptyBlock, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -20,7 +22,8 @@ import org.apache.spark.sql.types._
   * (/root/reference/src/ffi.rs:12-24) as Spark nested types.
   *
   * Every expression here implements `doGenCode` as a static call into
-  * graft.functions.ExprHelpers, so the surrounding stage STAYS inside
+  * graft.functions.ExprHelpers (knn_cells: a call on its per-partition
+  * search state), so the surrounding stage STAYS inside
   * whole-stage codegen (a CodegenFallback expression would force the whole
   * stage into interpreted projection — measured in PlanSpec).
   */
@@ -194,7 +197,7 @@ case class TextFingerprintExpr(child: Expression) extends UnaryExpression {
 }
 
 /** `cell_kring(cell, k) -> array<bigint>` — all cells within Chebyshev
-  * distance k (kNN candidate neighbourhood), sorted.
+  * distance k (the radius join's candidate neighbourhood), sorted.
   */
 case class CellKRingExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -212,9 +215,9 @@ case class CellKRingExpr(left: Expression, right: Expression)
 }
 
 /** `cell_annulus(cell, r_inner, r_outer) -> array<bigint>` — cells with
-  * Chebyshev distance in (r_inner, r_outer]: the INCREMENTAL kNN-round
-  * neighbourhood (kRing(r_outer) minus kRing(r_inner)), so round r+1
-  * re-scans only the new ring shell instead of the whole disk.
+  * Chebyshev distance in (r_inner, r_outer]: the ring shell
+  * kRing(r_outer) minus kRing(r_inner), so a widening search re-scans
+  * only the new shell instead of the whole disk.
   */
 case class CellAnnulusExpr(cell: Expression, rInner: Expression, rOuter: Expression)
     extends TernaryExpression {
@@ -232,6 +235,87 @@ case class CellAnnulusExpr(cell: Expression, rInner: Expression, rOuter: Express
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
     copy(cell = f, rInner = s, rOuter = t)
+}
+
+/** `knn_cells(x, y, k, cells, counts) -> struct<r2: double, cells:
+  * array<bigint>>` — the per-point search of the kNN join
+  * (SpatialJoins.knnJoin) over a count quadtree of the label cells: `r2`
+  * is the d2 bound a candidate label must meet, `cells` the non-empty
+  * leaf cells that can hold such a label (see CellQuadtree.Search.run).
+  *
+  * The quadtree reaches the expression as a broadcast of primitive
+  * arrays: every executor deserializes it once, and each partition keeps
+  * one reusable search state, so a row allocates only its cell array.
+  * The returned struct is reused across rows, like a projection's row.
+  *
+  * SQL form: `cells` and `counts` are constant arrays of the non-empty
+  * leaf cells (all at one level, which becomes the leaf level) and their
+  * label counts; labels are taken to lie inside the lon/lat domain.
+  */
+case class KnnCellsExpr(x: Expression, y: Expression, k: Expression,
+                        tree: Broadcast[CellQuadtree]) extends TernaryExpression {
+  override def first: Expression = x
+  override def second: Expression = y
+  override def third: Expression = k
+  override def dataType: DataType = KnnCellsExpr.resultType
+  override def prettyName: String = "knn_cells"
+  override def stateful: Boolean = true
+
+  @transient private lazy val state = new KnnCellsState(tree.value)
+
+  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
+    state.eval(a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bc = ctx.addReferenceObj("knnTree", tree, classOf[Broadcast[_]].getName)
+    val cls = classOf[KnnCellsState].getName
+    val st = ctx.addMutableState(cls, "knnCells",
+      v => s"$v = new $cls((${classOf[CellQuadtree].getName}) $bc.value());",
+      forceInline = true)
+    defineCodeGen(ctx, ev, (a, b, c) => s"$st.eval($a, $b, $c)")
+  }
+
+  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
+    copy(x = f, y = s, k = t)
+}
+
+object KnnCellsExpr {
+  val resultType: StructType = StructType(Seq(
+    StructField("r2", DoubleType, nullable = false),
+    StructField("cells", ArrayType(LongType, containsNull = false), nullable = false)))
+
+  /** The SQL builder: the constant histogram becomes a broadcast quadtree. */
+  def fromHistogram(x: Expression, y: Expression, k: Expression,
+                    cells: Expression, counts: Expression): KnnCellsExpr = {
+    require(cells.foldable && counts.foldable,
+      "knn_cells: cells and counts must be constant arrays")
+    def longs(e: Expression): Array[Long] =
+      Cast(e, ArrayType(LongType)).eval().asInstanceOf[ArrayData].toLongArray()
+    val (cs, ns) = (longs(cells), longs(counts))
+    require(cs.length == ns.length, "knn_cells: cells and counts differ in length")
+    val level = cs.headOption.map(CellIndex.levelOf).getOrElse(0)
+    require(cs.forall(CellIndex.levelOf(_) == level), "knn_cells: cells mix levels")
+    val byCell = scala.collection.mutable.LongMap.empty[Long]
+    cs.indices.foreach(i => byCell(cs(i)) = byCell.getOrElse(cs(i), 0L) + ns(i))
+    val sorted = byCell.keys.toArray.sorted
+    val h = CellHistogram(level, sorted, sorted.map(byCell(_)), CellIndex.MinX,
+      CellIndex.MinY, CellIndex.MinX + CellIndex.SpanX, CellIndex.MinY + CellIndex.SpanY)
+    KnnCellsExpr(x, y, k,
+      SparkSession.active.sparkContext.broadcast(CellQuadtree(h, level)))
+  }
+}
+
+/** One partition's reusable `knn_cells` state over a broadcast quadtree. */
+final class KnnCellsState(tree: CellQuadtree) {
+  private val search = new CellQuadtree.Search(tree)
+  private val row = new SpecificInternalRow(KnnCellsExpr.resultType.map(_.dataType))
+
+  def eval(x: Double, y: Double, k: Int): InternalRow = {
+    row.setDouble(0, search.run(x, y, k))
+    row.update(1, UnsafeArrayData.fromPrimitiveArray(
+      search.cells, org.apache.spark.unsafe.Platform.LONG_ARRAY_OFFSET, search.nCells, 8))
+    row
+  }
 }
 
 /** `lsh_bucket(q, planes, dim) -> bigint` — sign-LSH bucket of a quantized

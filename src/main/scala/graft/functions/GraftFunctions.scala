@@ -17,6 +17,7 @@ object GraftFunctions {
     "cell_parent" -> (e => CellParentExpr(e(0))),
     "cell_kring" -> (e => CellKRingExpr(e(0), e(1))),
     "cell_annulus" -> (e => CellAnnulusExpr(e(0), e(1), e(2))),
+    "knn_cells" -> (e => KnnCellsExpr.fromHistogram(e(0), e(1), e(2), e(3), e(4))),
     "lsh_bucket" -> (e => LshBucketExpr(e(0), e(1), e(2))),
     "ivf_nearest" -> (e => IvfNearestExpr(e(0), e(1), e(2), e(3))),
     "text_fingerprint" -> (e => TextFingerprintExpr(e(0))),
@@ -53,6 +54,12 @@ object GraftFunctions {
   def cell_kring(cell: Column, k: Column): Column = fn("cell_kring", cell, k)
   def cell_annulus(cell: Column, rInner: Column, rOuter: Column): Column =
     fn("cell_annulus", cell, rInner, rOuter)
+  /** `knn_cells` over an already-broadcast quadtree (the knnJoin path). */
+  def knn_cells(x: Column, y: Column, k: Column,
+                tree: org.apache.spark.broadcast.Broadcast[graft.geom.CellQuadtree]): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(KnnCellsExpr(expression(x), expression(y), expression(k), tree))
+  }
   def lsh_bucket(q: Column, planes: Column, dim: Column): Column =
     fn("lsh_bucket", q, planes, dim)
   def ivf_nearest(q: Column, cent: Column, nLists: Column, rank: Column): Column =

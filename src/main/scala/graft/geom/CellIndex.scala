@@ -15,8 +15,8 @@ import scala.collection.mutable
   *  - Morton order gives spatial locality, so range-partitioning by
   *    cell id co-locates neighbouring cells — the partitioning story
   *    for the PIP/kNN joins (SURVEY.md §2.2 E6-E9);
-  *  - `kRing` (all cells within Chebyshev distance k) drives kNN
-  *    candidate expansion;
+  *  - `kRing` (all cells within Chebyshev distance k) drives the
+  *    radius join's candidate cells;
   *  - `cover` (exact set of cells a polygon intersects) drives the
   *    PIP join prefilter. Cover is computed by supercover edge
   *    walking + scanline interior fill, O(edges * cellsPerEdge +
@@ -100,7 +100,7 @@ object CellIndex {
 
   /** All cells within Chebyshev distance k (the filled (2k+1)^2 disk,
     * clamped at the grid boundary), sorted ascending. k=0 is the cell
-    * itself. This is the kNN candidate-expansion neighbourhood.
+    * itself. This is the radius join's candidate neighbourhood.
     */
   def kRing(cell: Long, k: Int): Array[Long] = {
     require(k >= 0, "k must be >= 0")
@@ -124,8 +124,8 @@ object CellIndex {
 
   /** Cells with Chebyshev distance in (rInner, rOuter] of `cell` — exactly
     * kRing(rOuter) minus kRing(rInner), with the same boundary clamping —
-    * sorted ascending. The incremental kNN-round neighbourhood: round r
-    * explodes only the cells NOT already scanned at radius rInner.
+    * sorted ascending: the ring shell an incremental search adds when it
+    * widens from radius rInner to rOuter.
     */
   def annulus(cell: Long, rInner: Int, rOuter: Int): Array[Long] = {
     require(rInner >= 0 && rOuter >= rInner, s"bad annulus [$rInner, $rOuter]")

@@ -6,13 +6,18 @@ import org.apache.spark.storage.StorageLevel
 
 /** Cache discipline shared by the graft operators: an operator that
   * persists intermediates must not leak them past its own return
-  * (measured failure mode: a kNN round's stale cached blocks evicted the
-  * next workload's execution memory and turned a 14 s join into 195 s).
+  * (measured failure mode: stale cached blocks of one operator evicted
+  * the next workload's execution memory and turned a 14 s join into
+  * 195 s).
   *
-  * Pattern: persist the (output-sized, small) RESULT, force it with one
-  * count, then drop every intermediate cache. The caller owns the
-  * returned frame's storage and releases it with [[release]] when done —
-  * specs assert nothing else stays behind.
+  * Two shapes of result:
+  *  - materialized: persist the (output-sized, small) RESULT, force it
+  *    with one count, drop every intermediate ([[materializeAndRelease]]);
+  *  - truncated: an iterative operator's eager `localCheckpoint`, tagged
+  *    with [[own]] (connected components).
+  * The caller releases either with [[release]] when done — specs assert
+  * nothing else stays behind. For the lazy operator results (knnJoin,
+  * bruteTopK) `release` is a harmless call.
   */
 object Caching {
 
@@ -25,49 +30,12 @@ object Caching {
   }
 
   // RDD ids of localCheckpoint leaves the graft operators created
-  // themselves (via SpatialJoins.truncated -> own()). release() only
-  // unpersists leaf RDDs on this list: checkpoint blocks are
-  // UNRECOVERABLE, so blindly unpersisting every LogicalRDD leaf of an
-  // arbitrary frame could poison another still-live consumer sharing a
-  // caller-made checkpoint (Bench.exec calls release() on arbitrary
-  // workload results).
+  // themselves (via own()). release() only unpersists leaf RDDs on this
+  // list: checkpoint blocks are UNRECOVERABLE, so blindly unpersisting
+  // every LogicalRDD leaf of an arbitrary frame could poison another
+  // still-live consumer sharing a caller-made checkpoint (Bench.exec
+  // calls release() on arbitrary workload results).
   private val owned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  // operator results whose storage lives in ADOPTED intermediates (e.g.
-  // knnJoin returns an unpersisted union over its persisted round parts —
-  // re-materializing the whole output into a second cache costs a full
-  // count + cache-write pass); release(result) drops the adoptees.
-  // Identity-keyed for the exact-frame fast path, PLUS a plan signature
-  // (the result's LogicalRDD leaf rdd ids) so releasing a DERIVED frame
-  // (select/orderBy over the result — what SparkEntry's knn queries
-  // build) still finds the adoption: a narrow transform keeps every leaf
-  // of its parent's plan, so the signature survives derivation. Without
-  // this, releasing a derived frame was a silent no-op that stranded the
-  // part caches and leaked the map entry (strong DataFrame refs) for the
-  // session lifetime.
-  private final case class Adoption(sig: Set[Int], parts: Seq[DataFrame])
-  private val adoptees = java.util.Collections.synchronizedMap(
-    new java.util.IdentityHashMap[DataFrame, Adoption]())
-
-  private def leafRddIds(df: DataFrame): Set[Int] =
-    df.queryExecution.logical.collectLeaves().collect {
-      case l: LogicalRDD => l.rdd.id
-    }.toSet
-
-  /** Transfer ownership of `parts`' caches to `result`: [[release]] of
-    * the result — or of any frame derived from it by narrow transforms —
-    * unpersists them.
-    */
-  def adopt(result: DataFrame, parts: Seq[DataFrame]): DataFrame = {
-    val sig = leafRddIds(result)
-    if (sig.isEmpty)
-      // derived-frame release can't plan-match an empty signature — only
-      // an identity release of this exact frame will find the adoption
-      System.err.println("[graft] WARNING: adopting a result with no " +
-        "LogicalRDD leaves; release() must be called on this exact frame")
-    adoptees.put(result, Adoption(sig, parts))
-    result
-  }
 
   /** Tag a graft-made localCheckpoint frame's leaf RDDs as owned by the
     * engine, making them eligible for [[release]].
@@ -90,37 +58,6 @@ object Caching {
     */
   def release(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
-    // exact-identity adoption hit, then plan-resolved: an adoption
-    // matches when its (non-empty) leaf signature EQUALS this frame's
-    // leaves — a narrow transform keeps exactly its parent's leaves, so
-    // derived frames (select/orderBy over the result) still match. A
-    // PROPER-subset match additionally requires that no other adoption's
-    // signature intersects this frame's leaves: a frame built by feeding
-    // one adopted result into a second operator contains the first's
-    // leaves as a subset, and a bare subset rule would release the first
-    // result's still-live part caches when the second is released. The
-    // identity-removed adoption stays in the blocker list for that scan:
-    // removing it first would let a nested inner adoption (its leaves a
-    // proper subset of this frame's) match and lose its still-live part
-    // caches (round-6 advisor finding).
-    val removed = Option(adoptees.remove(df))
-    removed.foreach(_.parts.foreach(_.unpersist(blocking = false)))
-    val ids = leafRddIds(df)
-    if (ids.nonEmpty) adoptees.synchronized {
-      import scala.jdk.CollectionConverters._
-      val entries = adoptees.entrySet().asScala.toList
-      val blockers = entries.map(_.getValue) ++ removed
-      val matched = entries.filter { e =>
-        val a = e.getValue
-        a.sig.nonEmpty && (a.sig == ids ||
-          (a.sig.subsetOf(ids) && blockers.forall(o =>
-            (o eq a) || o.sig.intersect(ids).isEmpty)))
-      }
-      matched.foreach { e =>
-        e.getValue.parts.foreach(_.unpersist(blocking = false))
-        adoptees.remove(e.getKey)
-      }
-    }
     df.queryExecution.logical.collectLeaves().foreach {
       case l: LogicalRDD if owned.remove(l.rdd.id) => l.rdd.unpersist(blocking = false)
       case _ => ()

@@ -37,6 +37,10 @@ object Similarity {
     * `aggregate(zip_with(...))`, so no exchange carries dim x pairs rows
     * (the former per-component join + groupBy shuffled 64x the pair
     * count); the only exchange left is the slim window rank.
+    *
+    * The result is LAZY: every action on it recomputes the whole
+    * O(nQueries x N) cross join and rank. A caller that reads it more
+    * than once should persist it first (and unpersist it after).
     */
   /** In-row exact integer dot over two quantized arrays. `zip_with` pads
     * the shorter array with nulls, so the per-element product is wrapped

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.functions.GraftFunctions._
-import graft.geom.CellIndex
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.geom.{CellHistogram, CellIndex, CellQuadtree}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
 object SpatialJoins {
 
   /** Sentinel `level`: let the operator pick the cell level itself from
-    * the data (see [[autoLevel]] / the kNN density rule). A wrong manual
-    * level is the engine's biggest 100x-scale foot-gun — a too-fine grid
-    * makes PIP covers explode 4x per level and leaves kNN round 1
-    * resolving nothing; a too-coarse one stops pruning.
+    * the data (see [[autoLevel]] / the kNN label histogram). A wrong
+    * manual level is the engine's biggest 100x-scale foot-gun — a
+    * too-fine grid makes PIP covers explode 4x per level; a too-coarse one
+    * stops pruning.
     */
   val AutoLevel: Int = Int.MinValue
 
@@ -46,19 +46,6 @@ object SpatialJoins {
       val lvlF = math.floor(math.log(perAxis / frac) / math.log(2.0)).toInt
       math.max(0, math.min(CellIndex.MaxLevel, lvlF))
     }
-  }
-
-  /** Cell level for a kNN join, from label density: ~one label per cell
-    * (grid of 4^level cells ≈ label count), so a kRing(1) disk carries ~9
-    * expected candidates and round 1's guarantee usually resolves typical
-    * k. Uses optimizer rowCount stats when present; otherwise one count
-    * of the label side (which knnJoin re-derives anyway).
-    */
-  def knnAutoLevel(labels: DataFrame): Int = {
-    val n = labels.queryExecution.optimizedPlan.stats.rowCount
-      .map(_.toLong).getOrElse(labels.count())
-    val lvlF = math.round(math.log(math.max(1L, n).toDouble) / math.log(4.0)).toInt
-    math.max(1, math.min(CellIndex.MaxLevel, lvlF))
   }
 
   /** Point-in-polygon join.
@@ -257,480 +244,98 @@ object SpatialJoins {
     math.max(0, math.min(CellIndex.MaxLevel, lvlF))
   }
 
-  /** k-nearest-neighbour join: for every point, the k nearest label
-    * points (EDBT'12-style cell-ring expansion, SURVEY.md E9).
+  /** k-nearest-neighbour join: for every point, the k nearest labels by
+    * squared distance, ties broken by `poly_id` (bound-then-replicate in
+    * the style of Lu et al., EDBT 2012, with quadkey cells as pivots;
+    * SURVEY.md E9).
     *
     * points: (point_id, x, y);  labels: (poly_id, lx, ly)
+    * Output: (point_id, poly_id, d2, dist, rank), an ordinary lazy frame.
     *
-    * Rounds with growing Chebyshev ring radius r: candidates = equi-join
-    * on the exploded kRing(cell, r) of each unresolved point. A point is
-    * resolved when it has >= k candidates AND its kth distance is
-    * <= r * cellSize — the geometric guarantee that nothing outside the
-    * ring can be closer. Unresolved points (sparse regions) go to the
-    * next round; past the caller's rounds, ADAPTIVE EXTENSION rounds keep
-    * quadrupling the search radius by re-keying both sides at coarser
-    * grid levels (still 3x3-disk cell equi-joins — never a cross join)
-    * until the disk covers the grid and everything resolves.
-    * Output: (point cols, poly_id, dist, rank).
+    * One pass in three steps:
+    *  1. Histogram: one job over the label side counts labels per cell
+    *     and the driver builds a count quadtree of the non-empty cells
+    *     ([[graft.geom.CellQuadtree]]). The leaf level is `level` when
+    *     given, else the finest level whose occupied cells hold >= 2
+    *     labels on average — local density, so clustered labels cannot
+    *     fool it the way a global label count does.
+    *  2. Per-point search: the `knn_cells` expression runs a best-first
+    *     search over the broadcast quadtree from its root. It returns the
+    *     point's own guarantee D² and the non-empty leaves whose nearest
+    *     edge lies within D.
+    *  3. Join and rank: the points explode those leaves, run one cell
+    *     equi-join against the labels (broadcast, or a shuffle on the cell
+    *     key with `broadcastLabels = false`), keep `d2 <= D²` and rank with
+    *     one `row_number` window ordered by (d2, poly_id).
     *
-    * `broadcastLabels = true` assumes the label set fits on every executor
-    * (dimension-table case). With false, NEITHER side is broadcast: each
-    * label is replicated into the kRing of its own cell (Chebyshev rings
-    * are symmetric, so the candidate set is identical) and the join is a
-    * shuffle on the cell key — the path for label sets that rival the
-    * point set in size (both sides co-partition by cell).
+    * Why the result is exact:
+    *  - D² is the smallest value such that the leaves whose FARTHEST
+    *    corner lies within D hold >= k labels. Those labels all lie
+    *    within D, so the k-th ranked label, and every label tied with it
+    *    on d2, lies within D too. Every label within D sits in a leaf
+    *    whose NEAREST edge lies within D, so it is a candidate, and the
+    *    filter keeps it: ranking the candidates ranks all labels.
+    *  - Float rounding: the filter bound is D² widened by a relative
+    *    slack, and the cell cut uses a strictly wider one
+    *    (CellQuadtree.FilterSlack < CutSlack), so rounding can never drop
+    *    a label the filter would keep. A border cell's rectangle extends to
+    *    the labels' bounding box, which covers out-of-domain labels that
+    *    `cell_of` clamps into it.
+    *  - With fewer than k labels in the table, D = infinity and every
+    *    label is a candidate: the answer is the top-(what exists). An
+    *    empty label table gives an empty result.
+    *  - The search starts at the quadtree root, so a point far from every
+    *    label needs no extra rounds: its D simply comes out large.
     *
-    * Each round materializes its own RESOLVED OUTPUT SLICE; the count of
-    * still-unresolved points is maintained arithmetically off that slice
-    * (lazy advancement — see resolvePass), enabling early-exit without a
-    * per-round pass over the survivors. The returned DataFrame is
-    * the bare union over the operator's fully-materialized columnar
-    * round parts (no second output-sized cache); the parts' storage is
-    * ADOPTED by the result, so callers MUST drop it with
-    * `Caching.release(result)` (a bare `unpersist()` would leave the
-    * part caches behind) — no other cached state leaks.
-    *
-    * CARRY-FORWARD (`carryForward = true`, off by default): round r+1
-    * reuses the previous round's candidates — cached UNPRUNED, restricted
-    * to surviving points — and explodes only the NEW ring shell
-    * (`cell_annulus(prevR, r]`); Chebyshev disks nest, so the candidate
-    * set is identical to the full re-explode (SpatialJoinSpec asserts
-    * output equality). MEASURED AND DEFAULTED OFF: making candidates
-    * carriable forces materializing the unpruned candidate frame
-    * (points x ring cells x label density rows — ~190M rows / ~8 GB at
-    * bench scale 32), and that materialization took the 8-core bench
-    * round from ~30 s to 346 s. With a well-chosen cell level almost
-    * every point resolves in round 1, so re-exploding the small
-    * unresolved TAIL (the default) is strictly cheaper than storing
-    * everything in case it is needed. The option remains for workloads
-    * whose label density forces most points through many rounds.
-    *
-    * LINEAGE TRUNCATION: the unresolved-points chain (and the carried
-    * candidates in carry mode) is periodically materialized with an EAGER
-    * `localCheckpoint`, not a bare persist — "periodically" because lazy
-    * advancement (resolvePass) stacks at most three anti-join filters
-    * between checkpoints, so plan depth stays bounded. An iterative chain of
-    * persisted frames keeps its full LOGICAL lineage, and this loop's
-    * lineage otherwise grows exponentially in the round count (each
-    * round references the previous unresolved set twice) — measured: a
-    * 5-round run built a 2.1 GB plan string and OOM'd the driver inside
-    * AQE's plan-update logging. The checkpoint replaces the chain's plan
-    * with a LogicalRDD leaf, so every round's plan is constant-size.
-    * Eager is load-bearing: a lazy local checkpoint first computed inside
-    * an AQE shuffle-map stage (submitMapStage skips `doCheckpoint`) never
-    * finalizes, and releasing it then poisons every later job that walks
-    * the lineage. Round outputs (`ranked`) and the result stay COLUMNAR
-    * persists — InMemoryRelation scans measured ~4x faster than
-    * row-format checkpoint blocks at bench scale 32 — and nothing is
-    * released until the result is materialized, because a result branch
-    * whose cache substitution misses may recompute through these blocks,
-    * and a released local checkpoint on that path is unrecoverable
-    * (blocks are not rebuildable on executor loss — the standard
-    * iterative-Spark trade, bounded to this operator's lifetime).
-    *
-    * OUTPUT: (point_id, poly_id, d2, dist, rank) — the caller's own
-    * point coordinates are NOT echoed back by default (`outputXY =
-    * false`): they already sit keyed by point_id on the caller's side,
-    * and measured at campaign density (6.4M points, 3-variant A/B, min
-    * over interleaved rounds) dropping them from the ranking
-    * exchange/window sort AND skipping the output-sized re-join is
-    * 11-21% faster end-to-end at both 4 and 16 cores (noxy 11.7/25.3 s
-    * vs fat 13.2/32.7 s; the re-join variant ~= fat — it pays back what
-    * the slim window saves). `outputXY = true` restores the old
-    * 7-column shape via a point_id re-join.
+    * Cost: one histogram job before the call returns, whatever the data;
+    * the label projection is evaluated twice (histogram and join). The
+    * histogram holds at most min(#labels, 2^20) cells: a partition or a
+    * merge that would hold more rolls up one level at a time. The result
+    * owns no storage; `Caching.release(result)` is a harmless call. A
+    * point or label with a NaN or null coordinate gets or gives no rows.
     */
   def knnJoin(points: DataFrame, labels: DataFrame, k: Int,
               level: Int = AutoLevel,
-              rounds: Seq[Int] = Seq(1, 2, 4, 8),
-              broadcastLabels: Boolean = true,
-              carryForward: Boolean = false,
-              slimWindow: Boolean = true,
-              outputXY: Boolean = false): DataFrame = {
-    val lvl0 = if (level == AutoLevel) knnAutoLevel(labels) else level
-    val cellW = CellIndex.SpanX / CellIndex.gridSize(lvl0).toDouble
-    val cellH = CellIndex.SpanY / CellIndex.gridSize(lvl0).toDouble
-    val minDim = math.min(cellW, cellH)
-
-    // materialized once: every round (and the fallback) rebuilds its
-    // broadcast from `lab`, and without the cache each build re-runs the
-    // label-side lineage (often a polylabel computation) as its own
-    // serial-ish job — measured as part of the operator's
-    // parallelism-insensitive cost
-    val lab = labels
-      .withColumn("lcell", cell_of(col("lx"), col("ly"), lit(lvl0)))
-      .select("poly_id", "lx", "ly", "lcell")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // rank on SQUARED distance (exact arithmetic — products and sums only),
-    // so rankings are reproducible bit-for-bit by any engine; sqrt only for
-    // the reported dist column. Window row_number is the measured winner
-    // here (a collect_list hash-agg was 2x slower; a bounded
-    // TypedImperativeAggregate was 4-8x slower — per-key Java buffers
-    // thrash the GC at millions of groups).
+              broadcastLabels: Boolean = true): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    require(level == AutoLevel || (level >= 0 && level <= CellIndex.MaxLevel),
+      s"level $level outside 0..${CellIndex.MaxLevel}")
+    val lab = labels.select(col("poly_id"), col("lx"), col("ly"))
+    val hist = labelHistogram(lab, if (level == AutoLevel) CellIndex.MaxLevel else level)
+    val leaf = if (level == AutoLevel) CellHistogram.autoLeafLevel(hist) else hist.level
+    val tree = points.sparkSession.sparkContext.broadcast(CellQuadtree(hist, leaf))
+    val labCells = lab.withColumn("lcell", cell_of(col("lx"), col("ly"), lit(leaf)))
+    // squared distance in exact-order arithmetic (products and sums only),
+    // reproducible bit-for-bit by any engine; sqrt only for `dist`
+    val d2 = (col("x") - col("lx")) * (col("x") - col("lx")) +
+      (col("y") - col("ly")) * (col("y") - col("ly"))
+    val cand = points
+      .select(col("point_id"), col("x"), col("y"),
+        knn_cells(col("x"), col("y"), lit(k), tree).as("knn"))
+      .select(col("point_id"), col("x"), col("y"), col("knn.r2").as("r2"),
+        explode(col("knn.cells")).as("cell"))
+      .join(if (broadcastLabels) broadcast(labCells) else labCells,
+        col("cell") === col("lcell"))
+      .select(col("point_id"), col("poly_id"), d2.as("d2"), col("r2"))
+      .where(col("d2") <= col("r2"))
     val w = Window.partitionBy("point_id").orderBy(col("d2"), col("poly_id"))
+    cand.select(col("point_id"), col("poly_id"), col("d2"), row_number().over(w).as("rank"))
+      .where(col("rank") <= k)
+      .select(col("point_id"), col("poly_id"), col("d2"), sqrt(col("d2")).as("dist"),
+        col("rank"))
+  }
 
-    // The candidate frame drops x,y right after d2 is computed
-    // (slimWindow, the default): the ranking exchange and window sort
-    // then carry only (point_id, poly_id, d2) — 24 B of payload instead
-    // of 40 B. x,y are re-joined onto the OUTPUT-sized result at the end
-    // (candidates outnumber outputs ~10x at bench density, so shrinking
-    // the sorted bytes beats carrying the columns). This was the
-    // operator's measured scaling gap: ~25x more intermediate bytes per
-    // output row than pip_join, with x,y dead weight through the sort.
-    // slimWindow=false keeps the old carry-everything shape for A/B.
-    val candCols =
-      if (slimWindow) Seq("point_id", "poly_id", "d2")
-      else Seq("point_id", "x", "y", "poly_id", "d2")
-    def withD2(cand: DataFrame): DataFrame = cand
-      .withColumn("d2", (col("x") - col("lx")) * (col("x") - col("lx")) +
-        (col("y") - col("ly")) * (col("y") - col("ly")))
-      .select(candCols.map(col): _*)
-
-    // the input count rides the initial checkpoint job as an OBSERVED
-    // metric (CollectMetrics accumulators fill during the eager
-    // localCheckpoint's own materialization pass), so knowing the real
-    // point population costs ZERO extra jobs — the former shape spent one
-    // full checkpoint-sized count() inside round 1, the largest single
-    // item of the operator's per-run driver fixed cost (the measured
-    // residual that capped knn's 4v16 scaling efficiency once the payload
-    // wins landed). The fallback (metric absent — e.g. a Spark version
-    // that stops reporting observed metrics through checkpoint actions)
-    // is the old lazy count in resolvePass, so correctness never depends
-    // on the metric.
-    val (unresolved0, observedN) = truncatedCounting(points
-      .select(col("point_id"), col("x"), col("y"))
-      .withColumn("pcell", cell_of(col("x"), col("y"), lit(lvl0))))
-    var unresolved = unresolved0
-    // observed 0 is treated as unknown: an actually-empty input then takes
-    // the old lazy-count path, which already handles it (one empty round)
-    var nLeft = observedN.filter(_ > 0).getOrElse(Long.MaxValue)
-    // rounds since the unresolved chain was last checkpointed (see the
-    // lazy-advancement note in resolvePass)
-    var stackedDepth = 0
-    var resolvedParts = List.empty[DataFrame]
-    var carried: DataFrame = null // prev round's UNPRUNED candidates, cached
-    var prevR = 0
-    val cacheHandles = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val releaseHandles = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    releaseHandles += unresolved
-    val wc = Window.partitionBy("point_id")
-
-    // One pass = rank candidates + slice the resolved output + advance the
-    // unresolved chain. Shared by the main ring rounds and the adaptive
-    // extension rounds below.
-    //
-    // One window pass carries BOTH the ranking and the resolution proof.
-    // The <= rad2 prune is lossless: a point resolves at guarantee radius
-    // rad iff it has >= k candidates with d2 <= rad^2 (if the k nearest
-    // are within the guarantee radius they all survive the filter; if
-    // not, the filtered count is < k and the point carries to the next
-    // round) — so `count() over (partition by point_id)` after the rank
-    // filter replaces a separate kth-aggregate stage and the
-    // resolved-semi-join stage; the same exchange serves both windows.
-    // With `requireK = false` (a round whose candidate set is COMPLETE —
-    // the search disk covers the whole grid) every remaining point
-    // resolves with whatever candidates exist.
-    def resolvePass(candAll: DataFrame, rad2: Double, requireK: Boolean,
-                    tag: String): Unit = {
-      val pruned =
-        if (rad2 == Double.MaxValue) candAll else candAll.where(col("d2") <= rad2)
-      val ranked = pruned
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .withColumn("n_cand", count(lit(1)).over(wc))
-      // What gets cached is the round's RESOLVED OUTPUT SLICE — as a
-      // DIRECTLY-persisted columnar dataset, not a filtered view over a
-      // cached `ranked`. The result union only substitutes a branch's
-      // cache when the branch IS the cached dataset (measured: a union of
-      // directly-cached parts reads buffers in ~1 s where the
-      // filtered-view formulation recomputed every round's window
-      // pipeline — a flat, memory-bandwidth-bound ~14 s at ANY core
-      // count, the dominant parallelism-insensitive cost of this
-      // operator). `dist` is computed here, after the rank filter — the
-      // window exchange carries d2 only, not a redundant sqrt column.
-      // every output column is RE-ALIASED (fresh expression ids): all
-      // rounds' checkpoint LogicalRDDs carry the SAME attribute ids (a
-      // localCheckpoint keeps its plan's output attrs), so the result
-      // union's branches collide and the analyzer's DeduplicateRelations
-      // rewrites one branch's ids — after which that branch no longer
-      // matches its cache entry and silently RECOMPUTES through the
-      // checkpoint chain (measured: the round-3 "result assembly" cost,
-      // and a hard crash once the chains are released before the caller's
-      // read). Disjoint output ids keep dedup a no-op and every branch
-      // substitutes its cache.
-      val part = (if (requireK) ranked.where(col("n_cand") >= k) else ranked)
-        .withColumn("dist", sqrt(col("d2")))
-        .select((candCols ++ Seq("dist", "rank"))
-          .map(c => col(c).as(c)): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      resolvedParts ::= part
-      cacheHandles += part
-      // resolved ids come off the part's cache (rank==1 marks each
-      // resolved point exactly once)
-      val okIds = part.where(col("rank") === 1).select(col("point_id").as("ok_id"))
-      val t0 = System.nanoTime()
-      // LAZY ADVANCEMENT: nLeft is maintained ARITHMETICALLY (every okId
-      // is by construction a still-unresolved point, and row_number rank 1
-      // marks each resolved point exactly once), so a round costs one
-      // count over the round's own (small, cached) part — NOT a full
-      // checkpoint-write + full-scan count of the surviving point set.
-      // The old shape paid an unresolved-set-sized, memory-bandwidth-bound
-      // copy per round even when the round resolved NOTHING (a sparse
-      // label grid leaves early rings empty), and that copy was the
-      // operator's largest parallelism-insensitive cost. The anti-join
-      // filter is instead STACKED lazily onto the unresolved frame (a
-      // broadcast-hash probe fused into the next round's explode scan);
-      // the chain is re-checkpointed only when the write pays for itself —
-      // the set shrank >= 30% (all later rounds then scan fewer rows) or
-      // three filters have stacked (bounds plan depth and re-probe work).
-      val nResolved = okIds.count()
-      if (nLeft == Long.MaxValue) nLeft = unresolved.count() // once, round 1
-      val prevLeft = nLeft
-      nLeft = nLeft - nResolved
-      if (nResolved > 0 && nLeft > 0) {
-        val next =
-          unresolved.join(okIds, unresolved("point_id") === okIds("ok_id"), "left_anti")
-        stackedDepth += 1
-        if (stackedDepth >= 3 || nResolved * 10L >= prevLeft * 3L) {
-          stackedDepth = 0
-          // NOTHING is released mid-loop: the result assembly below may
-          // recompute a branch whose lineage reads these blocks (cache
-          // substitution is not guaranteed across the union), and a
-          // released local checkpoint in that path is an unrecoverable
-          // error — the measured crash mode. All storage is dropped
-          // together after the result is materialized (all truncated
-          // frames are tracked in releaseHandles at creation);
-          // MEMORY_AND_DISK spills rather than OOMs in the meantime.
-          unresolved = truncated(next)
-          releaseHandles += unresolved
-        } else unresolved = next
+  /** Labels per cell at `level`, from one job over (lx, ly): each
+    * partition builds its own histogram and the driver merges them as the
+    * tasks finish, both sides rolling up a level whenever more than
+    * CellHistogram.MaxCells cells are occupied.
+    */
+  private def labelHistogram(labels: DataFrame, level: Int): CellHistogram =
+    labels.select(col("lx"), col("ly")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val b = new CellHistogram.Builder(level)
+        rows.foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1)) b.add(r.getDouble(0), r.getDouble(1)))
+        Iterator.single(b.result())
       }
-      if (sys.env.contains("SPARK_GRAFT_KNN_DEBUG"))
-        System.err.println(f"[knn] round $tag advance=${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"resolved=$nResolved nLeft=$nLeft stacked=$stackedDepth")
-    }
-
-    // NOTE (round 7): a "skip ring rounds whose expected candidate count
-    // (2r+1)^2 * nLabels / 4^level is below k" heuristic was tried here,
-    // measured, and REVERTED. It sped the local[32] bench up (~0.7 s:
-    // fewer passes beat more exchanged rows when per-pass fixed cost
-    // dominates tiny data) but regressed the scale-64 campaign 6x at 4
-    // cores (knn 28 -> 177 s): GLOBAL density wildly underestimates
-    // clustered data — the synthetic labels occupy a 40x30-degree window
-    // where the real density is ~6.6 labels/cell, so the "hopeless"
-    // rounds actually resolve almost every point cheaply at the fine
-    // level, and skipping them pushed the full point set into a 16x
-    // denser coarser-level pass (~1B pruned candidate rows instead of a
-    // few million). A clustered-robust variant (occupied-cell density)
-    // can never fire for k <= 9 because occupied density is >= 1 by
-    // definition — dead code. Scheduled rounds therefore always run;
-    // the schedule stays the caller's scale knob.
-    val it = rounds.iterator
-    while (it.hasNext && nLeft > 0) {
-      val r = it.next()
-      // in carry mode, rounds after the first explode only the new shell;
-      // in the default mode every round explodes the full disk for the
-      // (small) unresolved tail
-      val fullDisk = !carryForward || carried == null
-      val newCand = roundCandidates(unresolved, lab, r, prevR,
-        first = fullDisk, broadcastLabels = broadcastLabels)
-      // Default path: the full-disk candidates are computed LAZILY inside
-      // the ranking job and pruned before its exchange — never stored.
-      // Carry-forward path: carried (restricted to surviving points — no
-      // broadcast hint, AQE picks one when small) union the new shell,
-      // materialized unpruned for the next round (see the trade-off note
-      // in the scaladoc).
-      val candAll =
-        if (!carryForward) withD2(newCand)
-        else truncated(
-          if (carried == null) withD2(newCand)
-          else carried
-            .join(unresolved.select("point_id"), Seq("point_id"), "leftsemi")
-            .unionByName(withD2(newCand)))
-
-      if (carryForward) {
-        if (carried != null) releaseHandles += carried
-        carried = candAll
-      }
-      resolvePass(candAll, (r * minDim) * (r * minDim), requireK = true, s"r=$r")
-      prevR = r
-    }
-    // ADAPTIVE EXTENSION ROUNDS replace the old all-labels cross-join
-    // fallback (which, in cell-partitioned mode, was the engine's one
-    // remaining shuffle-cartesian cliff: an adversarial density mismatch
-    // with a large unresolved tail AND a non-broadcastable label side
-    // built a cartesian over both). The search radius keeps doubling by
-    // COARSENING THE GRID instead of widening the ring: a 3x3 disk of
-    // level-(L-d) cells covers the same ground as a ring of radius
-    // 3*2^d level-L cells but explodes a constant 9 cells per leftover
-    // point per round, and both sides re-key at the coarser level so the
-    // join stays a cell equi-join in either mode — never a cartesian
-    // (SpatialJoinSpec asserts the executed plans). Descending two levels
-    // per round quadruples the radius, so the round count is logarithmic
-    // in the domain/cell ratio; at gridSize <= 3 the disk covers the
-    // whole grid, the candidate set is COMPLETE, and every remaining
-    // point resolves (requireK=false — with fewer than k labels in the
-    // whole table, top-(what exists) is the correct kNN answer, exactly
-    // what the cross join produced).
-    if (nLeft > 0) {
-      // first coarsening whose guarantee radius EXCEEDS the last ring's
-      // (2^d > rounds.last): re-searching a smaller disk would waste a
-      // round
-      // rounds = Seq.empty is a legal schedule (skip straight to the
-      // adaptive extension — the old cross-join fallback accepted it too);
-      // treat it as "last ring radius 1"
-      val dLvl = 32 - Integer.numberOfLeadingZeros(
-        math.max(1, rounds.lastOption.getOrElse(1)))
-      var lvl = math.max(0, lvl0 - dLvl)
-      var complete = false
-      while (nLeft > 0 && !complete) {
-        complete = CellIndex.gridSize(lvl) <= 3 // 3x3 disk covers the grid
-        val minDimL = math.min(CellIndex.SpanX / CellIndex.gridSize(lvl).toDouble,
-          CellIndex.SpanY / CellIndex.gridSize(lvl).toDouble)
-        val cand = extensionCandidates(unresolved, lab, lvl, broadcastLabels)
-        val rad2 = if (complete) Double.MaxValue else minDimL * minDimL
-        resolvePass(withD2(cand), rad2, requireK = !complete, s"lvl=$lvl")
-        lvl = math.max(0, lvl - 2)
-      }
-    }
-    // The result is the union over the per-round parts (plus, in slim
-    // mode, the x,y re-join below): each part is
-    // already a fully-materialized columnar cache (its own round's
-    // okIds/count consumption scanned every partition), union cache
-    // substitution hits directly-persisted branches (the r3 measured
-    // property), and re-materializing the whole output into a SECOND
-    // output-sized cache cost a full count + cache-write pass (measured
-    // 2.3-7.7 s at 3.2M points — a largely parallelism-insensitive copy,
-    // exactly the kind of fixed cost the scaling target punishes). The
-    // parts' caches transfer to the result (Caching.adopt), so
-    // `Caching.release(result)` still drops every block the operator
-    // made. Releasing the checkpointed chains here is safe for the same
-    // reason the old post-count release was: the parts' MEMORY_AND_DISK
-    // blocks are complete, and only an executor-loss class event (which
-    // local checkpoints never survive anyway — the documented
-    // iterative-Spark trade) could force a recompute through them.
-    // x,y re-joined onto the output-sized union (see withD2): the join
-    // keys point_id against the CALLER's points frame, so the extra
-    // exchange moves k*N output rows + N slim point rows — strictly less
-    // than the candidate-sized x,y payload it replaces in the window sort.
-    // outputXY=false skips the re-join and returns the slim columns only —
-    // callers that don't need the input coordinates echoed back (they
-    // already hold them keyed by point_id) save the output-sized join.
-    val slimUnion = resolvedParts.reduce(_ unionByName _)
-    val result =
-      if (!slimWindow) slimUnion // fat mode: x,y already in the parts
-      else if (!outputXY) slimUnion
-      else slimUnion
-        .join(points.select(col("point_id").as("xy_id"), col("x"), col("y")),
-          col("point_id") === col("xy_id"))
-        .select("point_id", "x", "y", "poly_id", "d2", "dist", "rank")
-    // materialization barrier BEFORE the chains are released: the parts
-    // are usually fully built by their own round's okIds consumption, but
-    // not guaranteed partition-by-partition, and a hole would recompute
-    // through the released checkpoints
-    // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). ONE count over the slim union
-    // fills any missing partitions of every part in a single job — union
-    // cache substitution hits each directly-persisted branch (the r3
-    // measured property), so this reads cached buffers only; the former
-    // per-part foreach(count) paid one driver job launch per round, part
-    // of the per-run fixed cost the scaling target punishes.
-    slimUnion.count()
-    // every truncated() frame was tracked at creation; the final
-    // `unresolved` may be a LAZY filter over the last checkpoint (lazy
-    // advancement), whose blocks are those of its tracked base
-    releaseHandles.foreach(release)
-    if (carried != null) release(carried)
-    lab.unpersist(blocking = false)
-    Caching.adopt(result, cacheHandles.toList.distinct)
-  }
-
-  /** One round's NEW candidate pairs: explode the (first round) full
-    * Chebyshev disk or (later rounds) only the annulus shell of each
-    * unresolved point, equi-join against the labels — broadcast for
-    * dimension-sized label sets, symmetric cell-shuffle otherwise.
-    * Package-private so PlanSpec can audit the physical shape directly
-    * (the executed round plans hide behind the lineage-truncation
-    * boundary in the composed operator).
-    */
-  private[graft] def roundCandidates(unresolved: DataFrame, lab: DataFrame,
-      r: Int, prevR: Int, first: Boolean, broadcastLabels: Boolean): DataFrame =
-    if (broadcastLabels) {
-      val ring = if (first) cell_kring(col("pcell"), lit(r))
-        else cell_annulus(col("pcell"), lit(prevR), lit(r))
-      unresolved
-        .withColumn("ncell", explode(ring))
-        .join(broadcast(lab), col("ncell") === col("lcell"))
-        .drop("ncell", "lcell")
-    } else {
-      // symmetric formulation: replicate each LABEL into the ring of its
-      // own cell and shuffle-join on the point's cell — identical
-      // candidate set (Chebyshev rings are symmetric), no broadcast
-      val ring = if (first) cell_kring(col("lcell"), lit(r))
-        else cell_annulus(col("lcell"), lit(prevR), lit(r))
-      val labRinged = lab.withColumn("rcell", explode(ring)).drop("lcell")
-      unresolved.join(labRinged, col("pcell") === col("rcell")).drop("rcell")
-    }
-
-  /** One adaptive extension round's candidates: both sides re-keyed at
-    * the coarser level `lvl`, the leftover points exploded into their 3x3
-    * disk, cell equi-join against the labels — broadcast only in
-    * dimension-label mode. Package-private so SpatialJoinSpec can audit
-    * the physical shape directly (the composed operator's executed plans
-    * hide behind the lineage-truncation boundary).
-    */
-  private[graft] def extensionCandidates(unresolved: DataFrame, lab: DataFrame,
-      lvl: Int, broadcastLabels: Boolean): DataFrame = {
-    val labL = lab.withColumn("lcell2", cell_of(col("lx"), col("ly"), lit(lvl)))
-      .select("poly_id", "lx", "ly", "lcell2")
-    unresolved
-      .withColumn("ncell",
-        explode(cell_kring(cell_of(col("x"), col("y"), lit(lvl)), lit(1))))
-      .join(if (broadcastLabels) broadcast(labL) else labL,
-        col("ncell") === col("lcell2"))
-  }
-
-  /** Materialize-and-truncate for the iterative kNN loop: an EAGER local
-    * checkpoint replaces the frame's logical plan with a LogicalRDD leaf
-    * over materialized MEMORY_AND_DISK blocks. Eager is load-bearing, not
-    * a convenience: a LAZY local checkpoint only finalizes in a job that
-    * calls `rdd.doCheckpoint()`, and AQE materializes shuffle-map stages
-    * through `submitMapStage`, which doesn't — the checkpoint then stays
-    * pending forever, and releasing its blocks leaves a marked-but-
-    * incomplete RDD that ANY later job touching the lineage trips over
-    * ("storage level not appropriate for local checkpointing" assertion;
-    * reproduced by graft.Bench's knn workload). Eager finalization also
-    * clears the dependency chain, which is the lineage cut we want.
-    */
-  private def truncated(df: DataFrame): DataFrame = {
-    // columns re-aliased BEFORE the checkpoint: a localCheckpoint's
-    // LogicalRDD keeps its plan's output attribute ids, and without fresh
-    // ids every round's checkpoint carries the SAME ids — the result
-    // union then holds several same-id relations, DeduplicateRelations
-    // rewrites all but one, and the rewritten branches stop matching
-    // their cache entries (silent recompute through the chains; crash
-    // once the chains are released)
-    val fresh = df.select(df.columns.toSeq.map(c => col(c).as(c)): _*)
-    Caching.own(fresh.localCheckpoint(eager = true))
-  }
-
-  /** [[truncated]] that also returns the frame's row count, observed FOR
-    * FREE during the eager checkpoint's own materialization job (a
-    * CollectMetrics node's accumulators fill while the tasks run — no
-    * second pass). The metric is read from the exact Dataset whose
-    * `localCheckpoint` executed: reading it from any other wrapper's
-    * QueryExecution returns that plan's own (never-run, zero-valued)
-    * accumulators. Returns None when the metric is unavailable so callers
-    * keep a correctness-neutral fallback.
-    */
-  private def truncatedCounting(df: DataFrame): (DataFrame, Option[Long]) = {
-    val fresh = df.observe("graft_truncated_n", count(lit(1)).as("n"))
-      .select(df.columns.toSeq.map(c => col(c).as(c)): _*)
-    val ck = Caching.own(fresh.localCheckpoint(eager = true))
-    val n = fresh.queryExecution.observedMetrics.get("graft_truncated_n")
-      .map(_.getLong(0))
-    (ck, n)
-  }
-
-  /** Release the blocks behind a [[truncated]] frame. */
-  private def release(df: DataFrame): Unit = Caching.release(df)
+      .fold(CellHistogram.empty(level))(CellHistogram.merge(_, _))
 }

@@ -47,6 +47,14 @@ object IcebergLite {
   def readLineage(spark: SparkSession, tableDir: String): DataFrame =
     spark.read.parquet(s"$tableDir/lineage")
 
+  /** The default bucket of a row: xxhash64 of `keyCols` mod `buckets`.
+    * A transform that re-derives the bucket column instead of carrying
+    * it through must use exactly this expression, or the re-pin filter in
+    * [[run]] drops its rows.
+    */
+  def defaultBucket(keyCols: Seq[String], buckets: Int): org.apache.spark.sql.Column =
+    pmod(xxhash64(keyCols.map(col): _*), lit(buckets)).cast("int")
+
   /** Run `transform` over `input`, bucketed by hash(keyCols) into
     * `buckets` partitions, processing `bucketsPerWave` buckets per Spark
     * job; skip buckets already recorded in lineage. Returns the buckets
@@ -68,6 +76,11 @@ object IcebergLite {
     * would never notice. The check costs one extra pass over the
     * transform output per wave; callers whose transforms provably
     * preserve the bucket column may disable it.
+    *
+    * Single writer: one run at a time per `tableDir`. The manifest's
+    * completed buckets are the lineage read at the start of the run plus
+    * the waves this run committed, so lineage rows appended by a
+    * concurrent run would be missing from this run's manifests.
     */
   def run(input: DataFrame, keyCols: Seq[String], buckets: Int,
           bucketsPerWave: Int, tableDir: String,
@@ -79,7 +92,7 @@ object IcebergLite {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     val withBucket = input.withColumn("bucket",
-      bucketExpr.getOrElse(pmod(xxhash64(keyCols.map(col): _*), lit(buckets)).cast("int")))
+      bucketExpr.getOrElse(defaultBucket(keyCols, buckets)))
 
     val done = completedBuckets(spark, tableDir)
     val pending = (0 until buckets).filterNot(done)

@@ -116,29 +116,59 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("*("), s"fingerprint fell out of whole-stage codegen:\n$plan")
   }
 
-  test("kNN join keeps the label side broadcast in every round") {
-    // audited on the round-candidate builder itself: the composed
-    // operator's executed plans hide behind its lineage-truncation
-    // (localCheckpoint) boundaries
-    import graft.functions.GraftFunctions.cell_of
-    val lab = GeoTables.syntheticPoints(spark, 10).toDF
-      .select(concat(lit("p"), col("point_id")).as("poly_id"),
-        col("x").as("lx"), col("y").as("ly"))
-      .withColumn("lcell", cell_of(col("lx"), col("ly"), lit(8)))
-    val pts = GeoTables.syntheticPoints(spark, 100).toDF
-      .withColumn("pcell", cell_of(col("x"), col("y"), lit(8)))
-    for (first <- Seq(true, false)) {
-      val plan = planOf(graft.operators.SpatialJoins.roundCandidates(
-        pts, lab, r = 2, prevR = 1, first = first, broadcastLabels = true))
-      assert(plan.contains("BroadcastHashJoin"),
-        s"labels must broadcast (first=$first):\n$plan")
-      assert(!plan.contains("CartesianProduct"), "no cross join in a round")
+  test("kNN join: one cell equi-join, one ranking window, constant job count") {
+    import graft.operators.SpatialJoins
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val pts = GeoTables.syntheticPoints(spark, 400).toDF
+    // dense: labels packed into a 2x2 degree box; sparse: spread over the
+    // globe, so most points sit far from every label
+    def labels(spanX: Double, spanY: Double) = spark.range(300).select(
+      concat(lit("L"), col("id")).as("poly_id"),
+      (pmod(col("id") * 7919, lit(1000)) / 1000.0 * spanX - spanX / 2).as("lx"),
+      (pmod(col("id") * 104729, lit(1000)) / 1000.0 * spanY - spanY / 2).as("ly"))
+    val dense = labels(2.0, 2.0)
+    val sparse = labels(350.0, 170.0)
+
+    // jobs the call itself launches before it returns the (lazy) result
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
-    // symmetric (no-broadcast) mode must be an equi-join on the cell key,
-    // never a cross join
-    val sym = planOf(graft.operators.SpatialJoins.roundCandidates(
-      pts, lab, r = 1, prevR = 0, first = true, broadcastLabels = false))
-    assert(!sym.contains("CartesianProduct"), s"symmetric mode crossed:\n$sym")
+    def drained(): Int = { // listener delivery is async: wait until quiet
+      var last = -1
+      while (last != jobs.get()) { last = jobs.get(); Thread.sleep(300) }
+      last
+    }
+    def jobsOf(f: => org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, Int) = {
+      val before = drained()
+      val df = f
+      (df, drained() - before)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (bcast <- Seq(true, false)) {
+        val (dRes, dJobs) = jobsOf(SpatialJoins.knnJoin(pts, dense, 5, broadcastLabels = bcast))
+        val (sRes, sJobs) = jobsOf(SpatialJoins.knnJoin(pts, sparse, 5, broadcastLabels = bcast))
+        assert(dJobs === sJobs, s"jobs before return: dense $dJobs vs sparse $sJobs (bcast=$bcast)")
+        assert(dJobs >= 1, "the label histogram is one job")
+        for (res <- Seq(dRes, sRes)) {
+          assert(res.collect().length === 400 * 5)
+          val plan = res.queryExecution.executedPlan
+          val text = plan.toString
+          assert(!text.contains("CartesianProduct") && !text.contains("BroadcastNestedLoopJoin"),
+            s"kNN must stay a cell equi-join (bcast=$bcast):\n$text")
+          assert(Plans.collect(plan) { case w: WindowExec => w }.size === 1,
+            s"exactly one ranking window expected:\n$text")
+          if (bcast) assert(text.contains("BroadcastHashJoin"), s"labels must broadcast:\n$text")
+          assert(!res.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRDD]),
+            s"no checkpoint leaves in the result:\n${res.queryExecution.analyzed}")
+        }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("CC phases: partial-agg min + equi-join, never a cross join") {

@@ -94,4 +94,27 @@ class ExpressionsSpec extends AnyFunSuite {
       .collect().head.getDouble(0)
     assert(got === want)
   }
+
+  test("knn_cells through SQL equals the quadtree search (codegen and interpreted)") {
+    val labels = Seq((1.0, 1.0), (1.0, 1.0), (2.0, 2.5), (-30.0, 10.0), (120.0, -45.0))
+    val lvl = 7
+    val b = new CellHistogram.Builder(lvl)
+    labels.foreach { case (x, y) => b.add(x, y) }
+    val search = new CellQuadtree.Search(CellQuadtree(b.result(), lvl))
+    val cells = labels.map { case (x, y) => s"${CellIndex.cellOf(x, y, lvl)}L" }.mkString(", ")
+    val call = s"knn_cells(x, y, 2, array($cells), array(${labels.map(_ => 1).mkString(", ")}))"
+    // spark.range keeps the projection in whole-stage codegen; VALUES
+    // folds into a local relation through interpreted evaluation
+    val viaRange = spark.range(7)
+      .selectExpr("cast(id as double) * 20.0 - 50.0 AS x", "cast(id as double) * 9.0 - 30.0 AS y")
+      .selectExpr("x", "y", s"$call AS k")
+    val viaValues = spark.sql(s"SELECT x, y, $call AS k FROM VALUES (0.5D, 0.5D), (150.0D, 80.0D) AS t(x, y)")
+    for (df <- Seq(viaRange, viaValues); r <- df.collect()) {
+      val (x, y) = (r.getDouble(0), r.getDouble(1))
+      val k = r.getStruct(2)
+      val r2 = search.run(x, y, 2)
+      assert(k.getDouble(0) === r2, s"($x, $y)")
+      assert(k.getSeq[Long](1).toSet === search.cells.take(search.nCells).toSet, s"($x, $y)")
+    }
+  }
 }

@@ -1,32 +1,15 @@
 package graft.operators
 
 import graft.TestSpark
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cache-ownership contract: release() must drop exactly what the graft
-  * operators own — adopted parts and graft-made checkpoint leaves — and
-  * never a caller's own storage.
+  * operators own — their persisted results and graft-made checkpoint
+  * leaves — and never a caller's own storage.
   */
 class CachingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("release(result) unpersists adopted parts") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val p1 = spark.range(100).toDF("a").persist(StorageLevel.MEMORY_AND_DISK)
-    val p2 = spark.range(100, 200).toDF("a").persist(StorageLevel.MEMORY_AND_DISK)
-    p1.count(); p2.count()
-    val result = Caching.adopt(p1.unionByName(p2), Seq(p1, p2))
-    assert(result.count() === 200)
-    Caching.release(result)
-    // unpersist is async (blocking=false); poll briefly
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(50)
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "adopted part caches must be dropped by releasing the result")
-  }
 
   test("release() leaves caller-made localCheckpoint leaves alone") {
     val ck = spark.range(50).toDF("a").localCheckpoint(true)

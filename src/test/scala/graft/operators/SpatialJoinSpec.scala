@@ -86,9 +86,10 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .select($"point_id", $"poly_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
 
-    // the operator contract: callers own the returned frame's (adopted)
-    // storage and MUST drop it with Caching.release — these tests also
-    // guard the ComponentsSpec/CachingSpec global leak asserts downstream
+    // the operator contract: callers may release any returned frame with
+    // Caching.release (a harmless call for knnJoin's lazy result) — these
+    // tests also guard the ComponentsSpec/CachingSpec global leak asserts
+    // downstream
     val gotDf = SpatialJoins.knnJoin(points, labels, k, level = 8)
     val got = gotDf.select($"point_id", $"poly_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
@@ -144,9 +145,9 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("knnJoin multi-round carry-forward: sparse labels, many rounds == brute") {
-    // 25 labels over a level-11 grid: almost nothing resolves in round 1,
-    // so rounds 2..4 exercise the carried-candidate union + annulus-shell
-    // explode path specifically (and the fallback catches the rest)
+    // 25 labels over a level-11 grid: almost every leaf cell is empty, so
+    // each point's guarantee radius spans many cells and the search climbs
+    // far up the quadtree
     val labels = polys
       .withColumn("label", polylabel($"exterior", $"holes", $"tolerance"))
       .select($"poly_id", $"label.x".as("lx"), $"label.y".as("ly"))
@@ -158,14 +159,13 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .where($"rank" <= k)
       .select($"point_id", $"poly_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    for (bcast <- Seq(true, false); carry <- Seq(false, true)) {
+    for (bcast <- Seq(true, false)) {
       val got = SpatialJoins.knnJoin(points.limit(500), labels, k, level = 11,
-        rounds = Seq(1, 2, 4, 8, 16), broadcastLabels = bcast,
-        carryForward = carry)
+        broadcastLabels = bcast)
       val gotSet = got.select($"point_id", $"poly_id", $"rank")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
       Caching.release(got)
-      assert(gotSet === brute, s"broadcastLabels=$bcast carryForward=$carry")
+      assert(gotSet === brute, s"broadcastLabels=$bcast")
     }
   }
 
@@ -184,7 +184,7 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   test("knnJoin adaptive fallback: isolated points, huge label side, no cartesian anywhere") {
     // adversarial density-mismatch layout (the old cross-join fallback's
     // cliff): labels clustered in one corner, probe points isolated far
-    // away, a fine grid level so the caller's rounds resolve NOTHING, and
+    // away, a fine grid level so no cell near a point holds a label, and
     // cell-partitioned (non-broadcast) label mode
     val labels = spark.range(2000).select(
       concat(lit("L"), $"id").as("poly_id"),
@@ -209,7 +209,7 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     spark.listenerManager.register(listener)
     val gotSet = try {
       val got = SpatialJoins.knnJoin(iso, labels, k = 3, level = 12,
-        rounds = Seq(1, 2), broadcastLabels = false)
+        broadcastLabels = false)
       val g = got.select($"point_id", $"poly_id", $"rank")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
       Caching.release(got)
@@ -234,21 +234,6 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .select($"point_id", $"poly_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
     assert(gotSet === brute, "adaptive fallback must still produce exact kNN")
-  }
-
-  test("knnJoin extension round shape: cell equi-join in both modes, broadcast only when asked") {
-    val lab = spark.range(10).select(concat(lit("p"), $"id").as("poly_id"),
-      ($"id" * 1.0).as("lx"), ($"id" * 0.5).as("ly"),
-      cell_of($"id" * 1.0, $"id" * 0.5, lit(8)).as("lcell"))
-    val pts = spark.range(20).select($"id".as("point_id"),
-      ($"id" * 2.0 - 120.0).as("x"), ($"id" * 1.0 - 60.0).as("y"))
-    for (bcast <- Seq(true, false)) {
-      val plan = SpatialJoins.extensionCandidates(pts, lab, lvl = 5, broadcastLabels = bcast)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-        s"extension round must stay an equi-join (bcast=$bcast):\n$plan")
-      if (bcast) assert(plan.contains("BroadcastHashJoin"), s"dimension mode should broadcast:\n$plan")
-    }
   }
 
   test("knnJoin resolves every point exactly k times") {
@@ -292,7 +277,7 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(gotK === bruteK)
   }
 
-  test("autoLevel scales with polygon bbox; knnAutoLevel with label count") {
+  test("autoLevel scales with polygon bbox") {
     def rects(hw: Double) = spark.range(50).select(array(
       struct(lit(-hw).as("x"), lit(-hw).as("y")),
       struct(lit(hw).as("x"), lit(-hw).as("y")),
@@ -306,12 +291,5 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(coarse >= 0 && fine <= graft.geom.CellIndex.MaxLevel)
     // degenerate side falls back to the historical constant
     assert(SpatialJoins.autoLevel(rects(0.0)) === 9)
-
-    // density rule: grid cells ~ label count (Range plans carry rowCount)
-    def labs(n: Long) = spark.range(n).select($"id".as("poly_id"),
-      lit(0.0).as("lx"), lit(0.0).as("ly"))
-    assert(SpatialJoins.knnAutoLevel(labs(4096)) === 6) // 4^6 = 4096
-    assert(SpatialJoins.knnAutoLevel(labs(16)) === 2)
-    assert(SpatialJoins.knnAutoLevel(labs(1)) === 1) // floor
   }
 }
