@@ -3,12 +3,12 @@
 # REAL standalone cluster at two cluster sizes — 1 vs 4 executor JVMs,
 # each 4 cores + 20g heap (its own worker daemon, heap, GC, and netty
 # shuffle server). Sides interleaved 1,4,1,4,... per round so co-tenant
-# interference hits both with equal probability; ClusterBench's report
-# takes per-workload MINS across rounds (same estimator as ScalingBench).
+# interference hits both with equal probability; `ScalingBench submit
+# report` takes per-workload MINS across rounds (the local estimator).
 #
 # Per side: boot master + the side's worker set, spark-submit
-# graft.ClusterBench, tear everything down. Runs from a fixed jar
-# (JAR=...) so the sbt dev loop can keep compiling.
+# `graft.ScalingBench submit <n>`, tear everything down. Runs from a
+# fixed jar (JAR=...) so the sbt dev loop can keep compiling.
 #   Usage: BENCH/run_cluster_scaling.sh <rounds> [scale] [passes]
 set -u
 cd "$(dirname "$0")/.."
@@ -37,7 +37,7 @@ start_cluster() { # $1 = worker count
       >"$LOGDIR/worker$w.log" 2>&1 &
     PIDS+=($!)
   done
-  # registration is cheap to await here; ClusterBench re-checks and
+  # registration is cheap to await here; ScalingBench re-checks and
   # records the OBSERVED executor count in the sample line regardless
   for _ in $(seq 1 60); do
     n=$(grep -c "Registering worker" "$LOGDIR/master.log" 2>/dev/null || true)
@@ -57,13 +57,13 @@ trap stop_cluster EXIT
 run_side() { # $1 = executor count
   start_cluster "$1"
   "$SPARK_HOME"/bin/spark-submit --master "$MASTER_URL" --deploy-mode client \
-    --class graft.ClusterBench --driver-memory 12g \
+    --class graft.ScalingBench --driver-memory 12g \
     --conf spark.executor.cores=4 --conf spark.executor.memory=20g \
     --conf spark.cores.max=$((4 * $1)) \
     --conf spark.locality.wait="${LOCALITY_WAIT:-0s}" \
     --conf spark.driver.extraJavaOptions=-XX:+UseParallelGC \
     --conf spark.executor.extraJavaOptions=-XX:+UseParallelGC \
-    "$JAR" "$1" 2>>"$LOGDIR/submit.log"
+    "$JAR" submit "$1" 2>>"$LOGDIR/submit.log"
   stop_cluster
 }
 

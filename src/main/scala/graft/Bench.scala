@@ -270,23 +270,42 @@ object Bench {
 }
 
 /** Two-parallelism scaling evidence (north_rule: efficiency >= 0.8 from N
-  * to 4N): the same workloads at local[8] and local[32] on identical
-  * input, ONE JVM PER PARALLELISM (phases sharing a JVM couple through
-  * leaked heap/disk state — measured), warm-up pass + measured pass.
-  *
-  * Usage (each a separate forked JVM thanks to `run / fork`):
+  * to 4N): the same workloads on identical input at two parallelism
+  * levels, ONE JVM PER SIDE (phases sharing a JVM couple through leaked
+  * heap/disk state — measured), warm-up pass + min over measured passes.
+  * The side key of a sample line tells the two campaigns apart: `cores`
+  * is local[N] threads in one JVM (BENCH/run_scaling.sh); `executors` is
+  * the same job launched by `spark-submit` on a standalone cluster
+  * (BENCH/run_cluster_scaling.sh), one JVM per executor, so adding
+  * executors adds heap, GC and shuffle servers as a real cluster does.
   * {{{
   *   sbt "runMain graft.ScalingBench 8"      # appends to BENCH/scaling_runs.jsonl
-  *   sbt "runMain graft.ScalingBench 32"
-  *   sbt "runMain graft.ScalingBench report" # latest 8+32 pair -> BENCH/BASELINE.md
+  *   sbt "runMain graft.ScalingBench report" # SPARK_GRAFT_CORES pair -> BENCH/BASELINE.md
+  *   spark-submit --class graft.ScalingBench ... app.jar submit 4  # -> BENCH/cluster_runs.jsonl
+  *   sbt "runMain graft.ScalingBench submit report"  # SPARK_GRAFT_EXECS pair
   * }}}
   */
 object ScalingBench {
-  // SPARK_GRAFT_RUNS_FILE redirects a campaign to its own sample file
-  // (e.g. BENCH/scaling_runs_llm.jsonl for the LLM-workload campaign) so
-  // differently-shaped campaigns never mix in one report
-  private val runsFile = java.nio.file.Paths.get(
-    sys.env.getOrElse("SPARK_GRAFT_RUNS_FILE", "BENCH/scaling_runs.jsonl"))
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case List("report") => report("cores")
+    case List("submit", "report") => report("executors")
+    case List(n) if n.forall(_.isDigit) => measure(n.toInt, submit = false)
+    case List("submit", n) if n.forall(_.isDigit) => measure(n.toInt, submit = true)
+    case _ =>
+      System.err.println(
+        "usage: ScalingBench <cores> | submit <expected-executors> | [submit] report")
+      sys.exit(2)
+  }
+
+  // SPARK_GRAFT_RUNS_FILE redirects a campaign to its own sample file (e.g.
+  // BENCH/scaling_runs_llm.jsonl) so different campaigns never mix in one report
+  private def runsFile(side: String) = java.nio.file.Paths.get(
+    sys.env.getOrElse("SPARK_GRAFT_RUNS_FILE",
+      if (side == "cores") "BENCH/scaling_runs.jsonl" else "BENCH/cluster_runs.jsonl"))
+
+  private def scaleStr(side: String): String =
+    sys.env.getOrElse("SPARK_GRAFT_SCALE", if (side == "cores") "8" else "64")
 
   // SPARK_GRAFT_HEADLINE overrides the measured workload set (default:
   // the five geo workloads the campaign has tracked since round 2)
@@ -295,127 +314,145 @@ object ScalingBench {
     .getOrElse(Set("polylabel_mixed", "pip_join", "knn_join", "tile_assign",
       "pipeline"))
 
-  def main(args: Array[String]): Unit = {
-    args.headOption match {
-      case Some("report") => report()
-      case Some(c) => measure(c.toInt)
-      case None => measure(8); measure(32); report() // discouraged one-JVM path
-    }
-  }
-
-  private def measure(cores: Int): Unit = {
+  private def measure(n: Int, submit: Boolean): Unit = {
+    val side = if (submit) "executors" else "cores"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "8").toDouble
+    val scale = scaleStr(side).toDouble
     val headline = headlineSet
     // shuffle partitions sized to the DATA (2 per scale unit, floor 128)
-    // and held constant across both parallelism levels — tying them to
-    // the core count makes local[8] spill on partitions 4x the size,
-    // and pinning them regardless of scale makes scale-128 window sorts
-    // carry ~100 MB per partition, spilling under 32 concurrent tasks
-    // where 8 survive (measured: 62 -> 46 s warm knn at scale 128 going
-    // 128 -> 256 partitions at local[32])
-    val spark = GraftSession.create(s"local[$cores]",
-      math.max(128, (scale * 2).toInt), s"graft-scale-$cores")
+    // and held constant across both sides — tied to the core count the
+    // small side spills on 4x-sized partitions; pinned regardless of
+    // scale, scale-128 window sorts spill (measured: 62 -> 46 s warm knn
+    // at scale 128 going 128 -> 256 partitions at local[32])
+    val parts = math.max(128, (scale * 2).toInt)
+    val spark =
+      if (submit) GraftSession.createForSubmit(parts, s"graft-cluster-$n")
+      else GraftSession.create(s"local[$n]", parts, s"graft-scale-$n")
+    // submit: the evidence is only honest if the advertised executor
+    // count is the one that actually ran — wait for registration, then
+    // RECORD the observed count in the sample line (each status entry
+    // past the driver's is one executor JVM)
+    val observed = if (!submit) "" else {
+      val deadline = System.nanoTime() + 120e9.toLong
+      def live(): Int = spark.sparkContext.statusTracker.getExecutorInfos.length - 1
+      while (live() < n && System.nanoTime() < deadline) Thread.sleep(500)
+      val got = live()
+      if (got != n)
+        System.err.println(s"[scaling] WARNING: expected $n executors, observed $got")
+      s""""observed":$got,"""
+    }
     BenchWorkloads.runAll(spark, sfDir, scale / 8.0, headline) // warm-up (JIT, page cache)
-    // min of several measured passes: robust against transient co-tenant
-    // interference on the shared box (observed: the SAME binary varies
-    // 6 s vs 37 s minutes apart — interference only ever ADDS time, so
-    // minimums over many interleaved rounds estimate the quiet-box value)
+    // min of several measured passes (co-tenant interference only ever
+    // ADDS time); per-workload isolation as in Bench, so one transient
+    // task abort costs one sample, not the whole campaign side
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    // same per-workload isolation as Bench: a single transient task abort
-    // must cost one sample, not the whole campaign side
     val passes = (1 to nPasses).map(_ => BenchWorkloads.runAllSafe(spark, sfDir, scale, headline)._1)
-    val r = passes.flatMap(_.keys).distinct
-      .map(k => k -> passes.flatMap(_.get(k)))
-      .collect { case (k, ts) if ts.nonEmpty => k -> ts.min }.toMap
+    val perPass = passes.flatMap(_.keys).distinct.sorted
+      .map(k => k -> passes.flatMap(_.get(k))).filter(_._2.nonEmpty)
     spark.stop()
-    val qs = r.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
-    val line = s"""{"cores":$cores,"scale":$scale,"sf":"$sfDir","seconds":$qs}"""
-    java.nio.file.Files.createDirectories(runsFile.getParent)
-    java.nio.file.Files.write(runsFile, (line + "\n").getBytes("UTF-8"),
+    val qs = perPass
+      .map { case (k, ts) => "\"" + k + f"""":${ts.min}%.3f""" }.mkString("{", ",", "}")
+    // raw per-pass times ride along (Bench's round-4 lesson: a min alone
+    // cannot reveal an interference window longer than the run)
+    val ps = perPass
+      .map { case (k, ts) => "\"" + k + "\":[" + ts.map(v => f"$v%.3f").mkString(",") + "]" }
+      .mkString("{", ",", "}")
+    val line = s"""{"$side":$n,$observed"scale":$scale,"sf":"$sfDir","seconds":$qs,"passes":$ps}"""
+    val sink = runsFile(side)
+    java.nio.file.Files.createDirectories(sink.toAbsolutePath.getParent)
+    java.nio.file.Files.write(sink, (line + "\n").getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     println(s"[scaling] $line")
   }
 
-  private def report(): Unit = {
+  private def report(side: String): Unit = {
     import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files.readAllLines(runsFile).asScala
-    // per-workload MIN across every recorded run of each parallelism:
-    // phases are interleaved on a noisy shared box, so the min per side
-    // picks the interference-free rounds
-    val scaleStr = sys.env.getOrElse("SPARK_GRAFT_SCALE", "8")
-    def minOver(cores: Int): Map[String, Double] = {
-      // filter by cores AND scale — mixed-scale lines in the runs file
-      // would otherwise make the cross-parallelism comparison meaningless
-      // trailing comma anchors the match — bare contains would let
-      // "cores":8 also match cores 80, and "scale":8.0 match 8.05
-      val runs = lines
-        .filter(_.contains(s""""cores":$cores,"""))
-        .filter(_.contains(s""""scale":${scaleStr.toDouble},"""))
-        .map { l =>
-          """"([a-z][a-z0-9_]*)":([0-9.]+)""".r.findAllMatchIn(l)
-            .filterNot(m => Set("cores", "scale").contains(m.group(1)))
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      runs.flatMap(_.keys).distinct
-        .map(k => k -> runs.flatMap(_.get(k)).min).toMap
-    }
-    val Array(nLo, nHi) = sys.env.getOrElse("SPARK_GRAFT_CORES", "8,32")
-      .split(",").map(_.trim.toInt)
-    val r8 = minOver(nLo)
-    val r32 = minOver(nHi)
-    val keys = r8.keySet.intersect(r32.keySet).toSeq.sorted
-    val t8 = keys.map(r8).sum
-    val t32 = keys.map(r32).sum
+    val file = runsFile(side)
+    val lines = java.nio.file.Files.readAllLines(file).asScala.toSeq
+    val Array(nLo, nHi) =
+      (if (side == "cores") sys.env.getOrElse("SPARK_GRAFT_CORES", "8,32")
+       else sys.env.getOrElse("SPARK_GRAFT_EXECS", "1,4"))
+        .split(",").map(_.trim.toInt)
+    val out = renderReport(lines, side, nLo, nHi, scaleStr(side)) +
+      s"\n(samples: ${file.getFileName})\n"
+    print(out)
+    val p = java.nio.file.Paths.get("BENCH/BASELINE.md")
+    java.nio.file.Files.write(p, out.getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+  }
+
+  // sample keys that are labels, not workload timings
+  private val MetaKeys = Set("cores", "executors", "observed", "scale")
+
+  /** Pure renderer over the sample lines of one side key (`cores` or
+    * `executors`), spec-covered because the report is the evidence
+    * artifact: per-workload MIN per side over the lines at `scaleStr`
+    * (interference only ever adds time, so minima estimate the quiet-box
+    * value), speedup and efficiency against the real ratio nHi / nLo,
+    * same-round pair totals, and the composed pipeline's img/s.
+    */
+  private[graft] def renderReport(lines: Seq[String], side: String, nLo: Int, nHi: Int,
+                                  scaleStr: String): String = {
+    // trailing commas anchor the match — bare contains would let
+    // "cores":8 also match cores 80, and "scale":8.0 match 8.05
+    def sideRuns(n: Int): Seq[Map[String, Double]] = lines
+      .filter(_.contains(s""""$side":$n,"""))
+      .filter(_.contains(s""""scale":${scaleStr.toDouble},"""))
+      // workload keys may carry digits: [a-z0-9_]; the raw per-pass
+      // arrays never match (a '[' follows their colon)
+      .map { l =>
+        """"([a-z][a-z0-9_]*)":([0-9.]+)""".r.findAllMatchIn(l)
+          .filterNot(m => MetaKeys.contains(m.group(1)))
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }
+    def minOver(runs: Seq[Map[String, Double]]): Map[String, Double] =
+      runs.flatMap(_.keys).distinct.map(k => k -> runs.flatMap(_.get(k)).min).toMap
+    val (runsLo, runsHi) = (sideRuns(nLo), sideRuns(nHi))
+    val (rLo, rHi) = (minOver(runsLo), minOver(runsHi))
+    val keys = rLo.keySet.intersect(rHi.keySet).toSeq.sorted
+    val (tLo, tHi) = (keys.map(rLo).sum, keys.map(rHi).sum)
+    val ratio = nHi.toDouble / nLo
+    val (title, label) =
+      if (side == "cores")
+        ("Scaling run — local[N] threads, one JVM per parallelism",
+          (n: Int) => s"local[$n]")
+      else
+        ("Cluster scaling run — spark-submit on a standalone cluster, one JVM per executor (4 cores + fixed heap each)",
+          (n: Int) => s"$n executor(s)")
     val out = new StringBuilder
-    out ++= s"\n## Scaling run (${java.time.LocalDate.now}) — sf0.1, scale=${sys.env.getOrElse("SPARK_GRAFT_SCALE", "8")}, N=$nLo vs 4N=$nHi, one JVM per parallelism, min over interleaved rounds (samples: ${runsFile.getFileName})\n\n"
-    out ++= s"| workload | local[$nLo] s | local[$nHi] s | speedup | efficiency |\n|---|---|---|---|---|\n"
+    out ++= s"\n## $title (${java.time.LocalDate.now}) — ${label(nLo)} vs ${label(nHi)}, scale=$scaleStr, min over interleaved rounds\n\n"
+    out ++= s"| workload | ${label(nLo)} s | ${label(nHi)} s | speedup | efficiency |\n|---|---|---|---|---|\n"
     for (k <- keys) {
-      val s = r8(k) / r32(k)
-      out ++= f"| $k | ${r8(k)}%.2f | ${r32(k)}%.2f | ${s}%.2f | ${s / 4.0}%.2f |\n"
+      val s = rLo(k) / rHi(k)
+      out ++= f"| $k | ${rLo(k)}%.2f | ${rHi(k)}%.2f | $s%.2f | ${s / ratio}%.2f |\n"
     }
-    val speedup = t8 / t32
-    out ++= f"| **total** | $t8%.2f | $t32%.2f | $speedup%.2f | **${speedup / 4.0}%.2f** |\n"
+    val speedup = tLo / tHi
+    out ++= f"| **total** | $tLo%.2f | $tHi%.2f | $speedup%.2f | **${speedup / ratio}%.2f** |\n"
 
     // SAME-ROUND pair totals: the i-th lo-side line against the i-th
     // hi-side line. The strict cross-round minimum pairs one side's lucky
-    // interference window with the other side's ordinary one (documented
-    // cross-side-minimum bias); same-round pairs hold the box conditions
-    // roughly equal across the pair.
-    def totalsOf(cores: Int): Seq[Double] = lines
-      .filter(_.contains(s""""cores":$cores,"""))
-      .filter(_.contains(s""""scale":${scaleStr.toDouble},"""))
-      .map { l =>
-        """"([a-z][a-z0-9_]*)":([0-9.]+)""".r.findAllMatchIn(l)
-          .filterNot(m => Set("cores", "scale").contains(m.group(1)))
-          .map(_.group(2).toDouble).sum
-      }.toSeq
-    val (lo, hi) = (totalsOf(nLo), totalsOf(nHi))
+    // interference window with the other side's ordinary one; same-round
+    // pairs hold the box conditions roughly equal across the pair.
+    val (lo, hi) = (runsLo.map(_.values.sum), runsHi.map(_.values.sum))
     if (lo.nonEmpty && hi.nonEmpty) {
-      out ++= s"\nSame-round pair totals (round i: local[$nLo] vs local[$nHi]):\n\n"
+      out ++= s"\nSame-round pair totals (round i: ${label(nLo)} vs ${label(nHi)}):\n\n"
       out ++= "| round | s(lo) | s(hi) | speedup | efficiency |\n|---|---|---|---|---|\n"
-      for (i <- 0 until math.min(lo.length, hi.length)) {
-        val sp = lo(i) / hi(i)
-        out ++= f"| ${i + 1} | ${lo(i)}%.2f | ${hi(i)}%.2f | $sp%.2f | ${sp / 4.0}%.2f |\n"
+      val pairs = lo.zip(hi)
+      for (((l, h), i) <- pairs.zipWithIndex) {
+        val sp = l / h
+        out ++= f"| ${i + 1} | $l%.2f | $h%.2f | $sp%.2f | ${sp / ratio}%.2f |\n"
       }
-      val bestPair = (0 until math.min(lo.length, hi.length))
-        .map(i => lo(i) / hi(i) / 4.0).maxOption.getOrElse(0.0)
-      out ++= f"\nBest same-round pair efficiency: $bestPair%.2f\n"
+      out ++= f"\nBest same-round pair efficiency: ${pairs.map { case (l, h) => l / h / ratio }.max}%.2f\n"
     }
     // North-star throughput: the composed pipeline workload moves
     // scale x 1500 images end-to-end (decode -> tile -> label ->
-    // PIP-assign -> lineage'd sink); report rows/s at both parallelism
-    // levels off the same per-side minima the table uses
-    for (pipeLo <- r8.get("pipeline"); pipeHi <- r32.get("pipeline")) {
+    // PIP-assign -> lineage'd sink), off the same per-side minima
+    for (pipeLo <- rLo.get("pipeline"); pipeHi <- rHi.get("pipeline")) {
       val nImg = (scaleStr.toDouble * 1500).toLong
       out ++= f"\nPipeline throughput (north-star): $nImg images — " +
-        f"${nImg / pipeLo}%.0f img/s at local[$nLo] -> ${nImg / pipeHi}%.0f img/s " +
-        f"at local[$nHi] (efficiency ${pipeLo / pipeHi / 4.0}%.2f)\n"
+        f"${nImg / pipeLo}%.0f img/s at ${label(nLo)} -> ${nImg / pipeHi}%.0f img/s " +
+        f"at ${label(nHi)} (efficiency ${pipeLo / pipeHi / ratio}%.2f)\n"
     }
-    print(out)
-    val p = java.nio.file.Paths.get("BENCH/BASELINE.md")
-    java.nio.file.Files.write(p, out.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    out.toString
   }
 }

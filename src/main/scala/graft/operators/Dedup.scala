@@ -186,9 +186,8 @@ object Dedup {
     * array: m_j = array_min over the same closed-form (a_j, b_j) hash the
     * groupBy build uses — bit-identical values, zero exchanges (min over
     * the array elements equals min over the exploded rows). An empty
-    * array yields null m_j, which bands nowhere (null band keys never
-    * equi-join) — the same candidacy as being absent from the groupBy
-    * build.
+    * array yields null m_j; callers drop zero-shingle reps before
+    * banding, the same candidacy as being absent from the groupBy build.
     */
   private def wideSigCols(si: Column, numHashes: Int): Seq[Column] =
     (0 until numHashes).map { j =>
@@ -207,12 +206,11 @@ object Dedup {
     (Caching.materializeAndRelease(s.out, s.shA), s.cand)
   }
 
-  /** The lazy stage frames of the exact LSH path — shared by the operator
-    * and the round-7 plan-evidence dump (graft.operators.PlanDump).
+  /** The lazy stage frames of the exact LSH path, exposed for the
+    * operator and its specs.
     */
   private[operators] final case class LshStages(
-      shA: DataFrame, members: DataFrame, wide: DataFrame, cand: DataFrame,
-      verified: DataFrame, out: DataFrame)
+      shA: DataFrame, wide: DataFrame, cand: DataFrame, out: DataFrame)
 
   private[operators] def minhashLshStages(
       docs: DataFrame, numHashes: Int, rowsPerBand: Int,
@@ -240,7 +238,9 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val members = shA.select(explode(col("ids")).as("doc_id"), col("rep_id"))
 
-    val wide = shA.select(
+    // zero-shingle reps (< 3 tokens) have no signature and must never
+    // band: drop them here rather than rely on null band keys not joining
+    val wide = shA.where(size(col("si")) >= 1).select(
       col("rep_id").as("doc_id") +: wideSigCols(col("si"), numHashes): _*)
     val cand = bandCandidates(wide, numHashes, rowsPerBand)
 
@@ -306,7 +306,7 @@ object Dedup {
             col("inter"), col("uni"))
           .unionByName(memberRows)
       }
-    LshStages(shA, members, wide, cand, verified, out)
+    LshStages(shA, wide, cand, out)
   }
 
   /** MinHash + LSH with SIGNATURE-ONLY verification — the web-scale
@@ -343,7 +343,7 @@ object Dedup {
         wideSigCols(transform(col("sh"), s => TextOps.shingleInt(s)), numHashes): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val members = sigW.select(explode(col("ids")).as("doc_id"), col("rep_id"))
-    val wide = sigW.select(
+    val wide = sigW.where(col("nsh") >= 1).select(
       col("rep_id").as("doc_id") +: (0 until numHashes).map(j => col(s"m$j")): _*)
     val cand = bandCandidates(wide, numHashes, rowsPerBand)
     val sigArr = sigW.select(col("rep_id"),

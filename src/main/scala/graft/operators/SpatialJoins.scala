@@ -74,8 +74,7 @@ object SpatialJoins {
     * tables keep the broadcast.
     */
   def pipJoin(points: DataFrame, polygons: DataFrame, level: Int = AutoLevel,
-              broadcastPolygons: Option[Boolean] = None,
-              slimShuffle: Boolean = true): DataFrame = {
+              broadcastPolygons: Option[Boolean] = None): DataFrame = {
     val spark = points.sparkSession
     val lvl = if (level == AutoLevel) autoLevel(polygons) else level
     val doBroadcast = broadcastPolygons.getOrElse {
@@ -133,32 +132,16 @@ object SpatialJoins {
         explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))).as("cell_id"))
       pts.join(broadcast(cellMap), "cell_id")
         .join(broadcast(polygons), "poly_id")
-    } else if (slimShuffle) {
+    } else {
       // shuffle path, two-stage like the broadcast path: shuffle the SLIM
       // (cell_id, poly_id) cover against the points, then re-join the
-      // geometry once per matched pair by poly_id for the refine. The
-      // alternative (geometry riding the cell shuffle, `slimShuffle =
-      // false` below) replicates each polygon's full geometry once per
-      // cover cell — an 8,854-vertex Norway-class polygon's ~140 KB rides
-      // the shuffle thousands of times at level 12+, and this path is
-      // exactly the one chosen for KNOWN-huge polygon tables. Measured
-      // A/B (graft.AbBench pip_shuffle, 2M points, min over interleaved
-      // passes; table in COVERAGE.md): level 12 x 1 Norway copy slim
-      // 2.0 s vs fat 13.5 s (6.8x); level 12 x 4 copies slim 8.3 s vs
-      // fat OutOfMemoryError (the ~36 GB replicated-geometry shuffle
-      // exhausts the 16 GB JVM); level 10 x 30 copies (small covers,
-      // the fat plan's best regime) slim 5.0 s vs fat 7.7 s — the slim
-      // re-join's extra shuffle of (point, poly_id) pairs never loses.
+      // geometry once per matched pair by poly_id, so a mega-polygon's
+      // geometry never rides the cell shuffle once per cover cell
+      // (measured in COVERAGE.md).
       val cover = polygons.select(col("poly_id"),
         explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))).as("cell_id"))
       pts.join(cover, "cell_id")
         .join(polygons, "poly_id")
-    } else {
-      // measured-and-rejected default; kept for the small-geometry regime
-      // and the A/B harness
-      val cover = polygons
-        .withColumn("cell_id", explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))))
-      pts.join(cover, "cell_id")
     }
     joined
       .where(pip(col("x"), col("y"), col("exterior"), col("holes")))

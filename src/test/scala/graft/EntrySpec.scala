@@ -20,4 +20,25 @@ class EntrySpec extends AnyFunSuite {
     assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty,
       "oracle entries without a query")
   }
+
+  test("every graft main the docs and scripts name resolves and has a main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val scripts = Files.list(Paths.get("BENCH")).iterator.asScala
+      .filter(_.toString.endsWith(".sh")).toSeq
+    val sources = Seq(Paths.get("README.md"), Paths.get(".claude/skills/verify/SKILL.md"))
+      .filter(Files.exists(_)) ++ scripts
+    // a class reference is graft.[package.]Name: it covers `runMain X`,
+    // `--class X` and a plain `java ... X` command line alike
+    val ref = """\bgraft\.(?:[a-z]\w*\.)*[A-Z]\w*""".r
+    val named = sources.flatMap(p =>
+      ref.findAllIn(new String(Files.readAllBytes(p), "UTF-8"))).toSet
+    assert(named.contains("graft.ScalingBench") && named.contains("graft.Verify"),
+      s"expected the documented mains, found $named")
+    val stale = named.filterNot { n =>
+      scala.util.Try(Class.forName(n + "$", false, getClass.getClassLoader)
+        .getMethod("main", classOf[Array[String]])).isSuccess
+    }
+    assert(stale.isEmpty, s"named in docs or scripts but no such main: $stale")
+  }
 }

@@ -94,6 +94,50 @@ class PipelineOpsSpec extends AnyFunSuite {
       s"LSH missed near-dup pairs: ${allPairs -- lsh}")
   }
 
+  test("zero-shingle reps never band: pair outputs == brute force, absent from wide") {
+    // empty and under-3-token texts (some exact duplicates of each other)
+    // have no shingles; they must yield no pairs, not even within their
+    // own exact-duplicate group, and never reach the band explode
+    val texts = Seq(1L -> "", 2L -> "", 3L -> "ab", 4L -> "ab", 5L -> "x y",
+      6L -> "q", 12L -> "ab cd",
+      7L -> "the quick brown fox jumps over the lazy dog",
+      8L -> "the quick brown fox jumps over the lazy dog",
+      9L -> "the quick brown fox jumps over the lazy dog",
+      10L -> "the quick brown fox jumps over the lazy dog again",
+      11L -> "completely different words here for testing")
+    val d = texts.map { case (id, t) => (id, t, "en") }.toDF("doc_id", "text", "lang")
+    def shingles(t: String): Set[String] = {
+      val tk = t.split(" ", -1).take(TextOps.MaxTokens)
+      tk.sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    }
+    val truth = (for ((a, ta) <- texts; (b, tb) <- texts if a < b;
+                      sa = shingles(ta); sb = shingles(tb)
+                      if sa.nonEmpty && sb.nonEmpty;
+                      inter = (sa & sb).size.toLong; uni = (sa | sb).size.toLong
+                      if inter * 2 >= uni) yield (a, b, inter, uni)).toSet
+    assert(truth.map(p => (p._1, p._2)) ===
+      Set((7L, 8L), (7L, 9L), (8L, 9L), (7L, 10L), (8L, 10L), (9L, 10L)))
+
+    val exact = Dedup.minhashLshPairs(d, 16, 4, 1, 2)
+    val got = exact.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    Caching.release(exact)
+    assert(got === truth)
+
+    val est = Dedup.minhashEstimatePairs(d, 16, 4, 1, 2)
+    val gotEst = est.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    Caching.release(est)
+    assert(gotEst.map(p => (p._1, p._2)).toSet === truth.map(p => (p._1, p._2)))
+    assert(gotEst.filter(p => texts.toMap.apply(p._1) == texts.toMap.apply(p._2))
+      .forall(_._3 == 16L), "identical texts estimate at exactly numHashes")
+
+    // only the reps with shingles (min doc_id per text) reach the banding
+    val s = Dedup.minhashLshStages(d, 16, 4, 1, 2, expandWithin = true)
+    val wideIds = s.wide.select("doc_id").collect().map(_.getLong(0)).toSet
+    s.shA.unpersist(blocking = true)
+    assert(wideIds === Set(7L, 10L, 11L))
+  }
+
   test("bruteTopK matches a driver-side exact computation") {
     val got = Similarity.bruteTopK(embeddings, nQueries = 5, k = 3)
       .select("query_id", "vec_id", "rank").collect()
